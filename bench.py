@@ -20,6 +20,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from usedcars_bigdata_spark.hoststat import (  # noqa: E402
+    cpu_jiffies,
+    env_fingerprint,
+    steal_pct,
+)
 from usedcars_bigdata_spark.plans import QUERIES  # noqa: E402
 from usedcars_bigdata_spark.session import get_session  # noqa: E402
 from usedcars_bigdata_spark.sources import load_table  # noqa: E402
@@ -46,60 +51,6 @@ BENCH_MODELS = ["linear", "decision_tree", "random_forest"]
 # The same-JVM number is still measured and recorded alongside
 # (BENCH_DETAIL "stream_same_jvm") so the delta stays observable.
 STREAM_ISOLATED_PREFIXES = ("ts_stream", "rows_stream")
-
-
-def _cpu_jiffies() -> tuple[int, int] | None:
-    """(steal, busy) jiffies from /proc/stat — see _env_fingerprint.
-
-    busy excludes idle and iowait (r13, ADVICE r12): steal only competes
-    with jiffies the guest actually wanted to run, so on a mostly-idle
-    32-core box dividing by ALL jiffies diluted a fully-stolen busy core
-    to ~3% — exactly the episodic-inflation signal the stamp exists to
-    attribute. steal_pct is now steal / (busy work), and the raw deltas
-    are recorded alongside so any ratio can be recomputed."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        vals = [int(v) for v in parts[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        idle_io = vals[3] + (vals[4] if len(vals) > 4 else 0)
-        return steal, sum(vals) - idle_io
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _env_fingerprint() -> dict:
-    """Stamp the record with the machine state at run time — the r8
-    driver-vs-committed bench delta (+27% uniform) could only be
-    adjudicated by re-running; with loadavg + concurrent-JVM count in
-    the record itself, the next such delta is attributable on sight.
-
-    r12 adds hypervisor STEAL: this sandbox is a VM on a shared host,
-    and the r12 before-record measured episodic 5–30× inflation of
-    individual queries (ref_like_not_filter 2.7 s → 95.3 s) at load1 =
-    1.5 with 32 idle cores — invisible to loadavg, fully explained by
-    /proc/stat steal (cumulatively ~47% of all work jiffies on this
-    box). main() snapshots jiffies at start/end and records steal as a
-    % of the run's elapsed jiffies, so a noisy record is attributable
-    without re-running."""
-    try:
-        load1, load5, _ = os.getloadavg()
-    except OSError:
-        load1 = load5 = -1.0
-    n_java = 0
-    try:
-        for pid in os.listdir("/proc"):
-            if not pid.isdigit():
-                continue
-            try:
-                with open(f"/proc/{pid}/comm") as fh:
-                    if fh.read().strip() == "java":
-                        n_java += 1
-            except OSError:
-                continue
-    except OSError:
-        n_java = -1
-    return {"load1": round(load1, 2), "load5": round(load5, 2), "n_java": n_java}
 
 
 def time_isolated(name: str, sf_dir: str) -> float:
@@ -139,7 +90,13 @@ def time_query(spark, sf_dir: str, name: str) -> float:
     finally:
         # try/finally (r13, ADVICE r12): a raising entry must not leak a
         # stream-sized conf or a persisted hub into the next entry for a
-        # caller that catches and continues.
+        # caller that catches and continues. Dropping the pending batch
+        # snapshot too (as tests/conftest.py does) keeps an entry that
+        # raised between save and restore from turning the next entry's
+        # save into a no-op and its restore into a stale write.
+        from usedcars_bigdata_spark.streaming import events
+
+        events._SAVED_BATCH_SHUFFLE.clear()
         spark.conf.set("spark.sql.shuffle.partitions", default_sp)
         # Per-entry cache hygiene: entries are independent, so a hub one
         # entry persist()ed must not occupy storage memory while the next
@@ -217,8 +174,8 @@ def main() -> None:
     # steady-state (r4: ml_linear 6.46s at position 83 vs 0.65s isolated;
     # scripts/bench_isolated.py reproduces). Running them in a fresh heap
     # keeps the recorded number close to what a dedicated job would see.
-    env = _env_fingerprint()
-    jiffies_start = _cpu_jiffies()
+    env = env_fingerprint()
+    jiffies_start = cpu_jiffies()
     timings: dict[str, float] = {}
     stream_same_jvm: dict[str, float] = {}
     timings.update(time_models(spark, sf_dir))
@@ -239,13 +196,11 @@ def main() -> None:
         else:
             timings[name] = dt
 
-    jiffies_end = _cpu_jiffies()
+    jiffies_end = cpu_jiffies()
     if jiffies_start and jiffies_end:
-        dsteal = jiffies_end[0] - jiffies_start[0]
-        dbusy = jiffies_end[1] - jiffies_start[1]
-        env["steal_pct"] = round(100.0 * dsteal / max(dbusy, 1), 2)
-        env["steal_jiffies"] = dsteal
-        env["busy_jiffies"] = dbusy
+        env["steal_pct"] = steal_pct(jiffies_start, jiffies_end)
+        env["steal_jiffies"] = jiffies_end[0] - jiffies_start[0]
+        env["busy_jiffies"] = jiffies_end[1] - jiffies_start[1]
 
     total = round(sum(timings.values()), 3)
     detail = {

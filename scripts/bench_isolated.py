@@ -27,6 +27,12 @@ import time
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+from usedcars_bigdata_spark.hoststat import (  # noqa: E402
+    cpu_jiffies,
+    env_fingerprint,
+    steal_pct,
+)
+
 
 def child(name: str, sf_dir: str, reps: int, warmup: bool = True) -> None:
     from usedcars_bigdata_spark.plans import QUERIES
@@ -110,53 +116,6 @@ MOVERS = [
 NO_WARMUP_PREFIXES = ("ts_stream", "rows_stream")
 
 
-def _cpu_jiffies() -> tuple[int, int] | None:
-    """(steal, busy) jiffies from /proc/stat; busy excludes idle+iowait so
-    steal is measured against work the guest wanted to run (r13 — same
-    semantics as bench.py; the r12 isolated records could not prove the
-    uniform headline drift was host steal because this recorder did not
-    stamp it)."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        vals = [int(v) for v in parts[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        idle_io = vals[3] + (vals[4] if len(vals) > 4 else 0)
-        return steal, sum(vals) - idle_io
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _steal_pct(start: tuple[int, int] | None,
-               end: tuple[int, int] | None) -> float | None:
-    if not start or not end:
-        return None
-    dsteal = end[0] - start[0]
-    dbusy = end[1] - start[1]
-    return round(100.0 * dsteal / max(dbusy, 1), 2)
-
-
-def _env_fingerprint() -> dict:
-    try:
-        load1, load5, _ = os.getloadavg()
-    except OSError:
-        load1 = load5 = -1.0
-    n_java = 0
-    try:
-        for pid in os.listdir("/proc"):
-            if not pid.isdigit():
-                continue
-            try:
-                with open(f"/proc/{pid}/comm") as fh:
-                    if fh.read().strip() == "java":
-                        n_java += 1
-            except OSError:
-                continue
-    except OSError:
-        n_java = -1
-    return {"load1": round(load1, 2), "load5": round(load5, 2), "n_java": n_java}
-
-
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("queries", nargs="*")
@@ -184,8 +143,8 @@ def main() -> int:
         return 0
 
     if args.record:
-        env = _env_fingerprint()
-        j_run_start = _cpu_jiffies()
+        env = env_fingerprint()
+        j_run_start = cpu_jiffies()
         mins = {}
         steal = {}
         for name in args.queries or (HEADLINE + MOVERS):
@@ -193,18 +152,18 @@ def main() -> int:
                    "--reps", str(args.reps), "--sf", args.sf, "--json"]
             if name.startswith(NO_WARMUP_PREFIXES):
                 cmd.append("--no-warmup")
-            j0 = _cpu_jiffies()
+            j0 = cpu_jiffies()
             out = subprocess.run(
                 cmd, capture_output=True, text=True, check=True,
             ).stdout
-            sp = _steal_pct(j0, _cpu_jiffies())
+            sp = steal_pct(j0, cpu_jiffies())
             r = json.loads(out.strip().splitlines()[-1])
             mins[name] = min(r["times"])
             if sp is not None:
                 steal[name] = sp
             print(f"{name:40s} min={mins[name]:6.3f}s runs={r['times']} "
                   f"steal={sp}%")
-        env["steal_pct"] = _steal_pct(j_run_start, _cpu_jiffies())
+        env["steal_pct"] = steal_pct(j_run_start, cpu_jiffies())
         record = {
             "env": env,
             "isolated_min_sec": dict(sorted(mins.items())),
@@ -223,14 +182,14 @@ def main() -> int:
         return 0
 
     for name in args.queries:
-        j0 = _cpu_jiffies()
+        j0 = cpu_jiffies()
         out = subprocess.run(
             [sys.executable, os.path.abspath(__file__), name,
              "--reps", str(args.reps), "--sf", args.sf, "--json"]
             + (["--no-warmup"] if args.no_warmup else []),
             capture_output=True, text=True, check=True,
         ).stdout
-        sp = _steal_pct(j0, _cpu_jiffies())
+        sp = steal_pct(j0, cpu_jiffies())
         r = json.loads(out.strip().splitlines()[-1])
         ts = r["times"]
         print(

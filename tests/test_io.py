@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -113,6 +116,91 @@ def test_load_table_vanilla_session(spark, sf_dir):
     ).fetchone()
     got = ev.agg(F.min("ts"), F.max("ts")).first()
     assert [str(v) for v in got] == [str(v) for v in want]
+
+
+def _jobs_submitted(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` submits, counted through a job group
+    once the listener bus has delivered their start events."""
+    sc = spark.sparkContext
+    group = f"test-io-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_schema_resolved_once_per_session(spark, sf_dir):
+    """The first load_table of a file infers its schema (one job over the
+    footers); every later one in the same session reads with the cached
+    schema and submits no job, and gives the same schema and rows."""
+    first = load_table(spark, sf_dir, "orders")
+    loaded = []
+    assert _jobs_submitted(
+        spark, lambda: loaded.append(load_table(spark, sf_dir, "orders"))
+    ) == 0
+    again = loaded[0]
+    assert again.schema == first.schema
+    assert again.count() == first.count()
+
+
+def test_load_table_cache_is_per_session(spark, sf_dir):
+    """A newSession() starts with no cached schemas of its own, so its first
+    load_table infers again even though the parent session has the entry."""
+    load_table(spark, sf_dir, "customer")
+    other = spark.newSession()
+    assert _jobs_submitted(other, lambda: load_table(other, sf_dir, "customer")) >= 1
+    assert _jobs_submitted(other, lambda: load_table(other, sf_dir, "customer")) == 0
+
+
+def test_load_table_redetects_rewritten_timestamp_layout(spark, tmp_path):
+    """events.parquet first as INT64 TIMESTAMP(NANOS), then rewritten at the
+    same path as micros NTZ: each load gives ``ts`` as a micros timestamp
+    whose min/max match DuckDB's reading of the file on disk, so the cached
+    schema of the first file is not reused for the second."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from usedcars_bigdata_spark.schemas import TESTDATA
+
+    path = tmp_path / "events.parquet"
+    base = int(dt.datetime(2024, 1, 1).timestamp()) * 10**9
+    # sub-microsecond digits, so the nanos → micros truncation is exercised
+    ns = [base + i * 1_234_567_891 for i in range(50)]
+    cols = {
+        "event_id": pa.array(range(50), pa.int64()),
+        "user_id": pa.array([i % 7 for i in range(50)], pa.int64()),
+        "event_type": pa.array(["view", "click"] * 25),
+        "value": pa.array([i / 4 for i in range(50)], pa.float64()),
+        "props": pa.array(["{}"] * 50),
+    }
+
+    def write(ts: pa.Array) -> None:
+        names = TESTDATA["events"].fieldNames()
+        table = pa.table({**cols, "ts": ts}).select(names)
+        pq.write_table(table, path, version="2.6")
+
+    def check() -> None:
+        ev = load_table(spark, str(tmp_path), "events")
+        assert ev.schema["ts"].dataType.simpleString() == "timestamp"
+        want = duckdb.sql(f"select min(ts), max(ts) from '{path}'").fetchone()
+        got = ev.agg(F.min("ts"), F.max("ts")).first()
+        assert [str(v) for v in got] == [str(v) for v in want]
+
+    write(pa.array(ns, pa.timestamp("ns")))
+    assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
+    check()
+    stamp = os.stat(path).st_mtime_ns
+    write(pa.array([v // 1000 for v in ns], pa.timestamp("us")))
+    # a later regeneration, even on a filesystem with coarse mtimes
+    os.utime(path, ns=(stamp + 10**9, stamp + 10**9))
+    assert pq.read_schema(path).field("ts").type == pa.timestamp("us")
+    check()
 
 
 def test_normalized_events_push_ts_predicates(spark, sf_dir, tmp_path):

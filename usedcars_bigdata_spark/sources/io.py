@@ -13,6 +13,7 @@ cluster.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -115,12 +116,49 @@ def normalize_timestamps_ingest(
     return spark.read.parquet(dest)
 
 
+# Per-session parquet schema cache for load_table: session -> {absolute
+# table path -> ((st_mtime_ns, st_size), schema)}. Weak keys, so a new or
+# stopped-and-rebuilt session starts empty and a dropped one frees its
+# entries; one entry per path, so a regenerated file replaces its entry.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _read_testdata(spark: SparkSession, path: str) -> tuple[DataFrame, T.StructType]:
+    """Scan ``path`` and return it with its schema, inferring the schema
+    (one Spark job over the footers) only the first time this session sees
+    the file at its current mtime and size. A path ``os.stat`` cannot see
+    (a missing directory, a non-local URI) is read uncached, so Spark still
+    raises its own AnalysisException for a missing one."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        df = spark.read.parquet(path)
+        return df, df.schema
+    key, stamp = os.path.abspath(path), (st.st_mtime_ns, st.st_size)
+    cache = _SCHEMAS.setdefault(spark, {})
+    hit = cache.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path), hit[1]
+    df = spark.read.parquet(path)
+    schema = df.schema
+    cache[key] = (stamp, schema)
+    return df, schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one harness testdata table (TESTDATA.md) by name.
 
+    The parquet schema is resolved once per session: the first call for a
+    file infers it (a Spark job over the footers) and caches it on the
+    session, keyed on the file's absolute path, ``st_mtime_ns`` and
+    ``st_size``; later calls pass the cached schema to the reader and launch
+    no job. A rewritten file gets a new mtime and is inferred again. Paths
+    ``os.stat`` cannot see (non-local URIs) are read uncached.
+
     Timestamp columns (e.g. events.ts) are normalized to the declared
     micros TimestampType regardless of how the harness generated the file
-    — generators have shipped BOTH layouts across rounds:
+    — generators have shipped BOTH layouts across rounds; which one a file
+    has is decided from the (cached) schema:
 
     - INT64 TIMESTAMP(NANOS): surfaces as long under ``nanosAsLong``
       (set here at runtime because callers — e.g. the driver harness —
@@ -135,19 +173,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TESTDATA:
         raise KeyError(f"unknown testdata table {name!r}; have {sorted(TESTDATA)}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    want = TESTDATA.get(name)
-    if want is not None:
-        for field in want.fields:
-            if not isinstance(field.dataType, T.TimestampType):
-                continue
-            actual = df.schema[field.name].dataType
-            if isinstance(actual, T.LongType):
-                df = df.withColumn(
-                    field.name, F.timestamp_micros(F.expr(f"{field.name} div 1000"))
-                )
-            elif isinstance(actual, T.TimestampNTZType):
-                df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
+    df, schema = _read_testdata(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    for field in TESTDATA[name].fields:
+        if not isinstance(field.dataType, T.TimestampType):
+            continue
+        actual = schema[field.name].dataType
+        if isinstance(actual, T.LongType):
+            df = df.withColumn(
+                field.name, F.timestamp_micros(F.expr(f"{field.name} div 1000"))
+            )
+        elif isinstance(actual, T.TimestampNTZType):
+            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
 
 
